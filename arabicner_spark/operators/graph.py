@@ -38,6 +38,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arabicner_spark.operators.components import one_slice_df
+
 
 def pagerank(
     edges: DataFrame,
@@ -207,7 +209,7 @@ def pagerank_personalized_exact(
             schema = StructType(
                 [StructField("node", node_type), StructField("rank_i", LongType())]
             )
-            return _one_slice_df(edges.sparkSession, rows, schema).select(
+            return one_slice_df(edges.sparkSession, rows, schema).select(
                 "node", F.col("rank_i").cast("long").alias("rank_i")
             )
     nodes = (
@@ -270,15 +272,6 @@ def pagerank_personalized_exact(
             .localCheckpoint(eager=True)
         )
     return ranks
-
-
-def _one_slice_df(session, rows, schema):
-    """Materialize a small local result as a DataFrame via a
-    SINGLE-slice RDD: the default createDataFrame path parallelizes
-    the list over defaultParallelism slices, paying ~cores empty
-    scheduler tasks for a dimension-sized result (measured
-    0.34 -> 0.21 s per materialization at local[32])."""
-    return session.createDataFrame(session.sparkContext.parallelize(rows, 1), schema)
 
 
 def _np_col(col):
@@ -403,7 +396,7 @@ def temporal_reach(
                     StructField("first_reach", LongType()),
                 ]
             )
-            return _one_slice_df(edges.sparkSession, rows, schema).select(
+            return one_slice_df(edges.sparkSession, rows, schema).select(
                 "node", F.col("first_reach").cast("long").alias("first_reach")
             )
     arr = seeds.select("node").distinct().select(
@@ -673,7 +666,7 @@ def label_propagation(
             schema = StructType(
                 [StructField("node", node_type), StructField("label", LongType())]
             )
-            return _one_slice_df(edges.sparkSession, out_rows, schema).select(
+            return one_slice_df(edges.sparkSession, out_rows, schema).select(
                 "node", F.col("label").cast("long").alias("label")
             )
     adj = (
@@ -783,7 +776,7 @@ def kcore(
         schema = StructType(
             [StructField("node", node_type), StructField("deg", IntegerType())]
         )
-        return _one_slice_df(
+        return one_slice_df(
             edges.sparkSession, [(n, int(d)) for n, d in surv], schema
         ).select("node", F.col("deg").cast("int").alias("deg"))
     adj = (
@@ -917,7 +910,7 @@ def kcore_fixpoint(
         schema = StructType(
             [StructField("node", node_type), StructField("deg", IntegerType())]
         )
-        out = _one_slice_df(spark, [(n, int(d)) for n, d in surv], schema)
+        out = one_slice_df(spark, [(n, int(d)) for n, d in surv], schema)
         return out.select("node", F.col("deg").cast("int").alias("deg")), rounds_run
 
     adj = (

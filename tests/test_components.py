@@ -1,5 +1,7 @@
 """Union-find fixpoint on known graphs (SURVEY.md section 5)."""
 
+import pytest
+
 from arabicner_spark.operators.components import connected_components
 
 
@@ -37,7 +39,8 @@ def test_cycle(spark):
 def test_adaptive_matches_distributed(spark):
     from arabicner_spark.operators.components import connected_components_adaptive
 
-    edges = [("b", "a"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"), ("r", "p")]
+    # ("", "a"): a real empty-string node must survive the driver path
+    edges = [("b", "a"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"), ("r", "p"), ("", "a")]
     df = spark.createDataFrame(edges, "a string, b string")
     dist = {(r.node, r.component) for r in connected_components(df).collect()}
     # driver path (threshold above edge count) and forced distributed
@@ -54,3 +57,13 @@ def test_adaptive_empty_edges(spark):
 
     df = spark.createDataFrame([], "a string, b string")
     assert connected_components_adaptive(df).count() == 0
+
+
+def test_non_convergence_raises(spark):
+    """A cap too low for the graph is an error, not a partial fixpoint;
+    the default cap converges on the same 8-node path."""
+    df = spark.createDataFrame([(f"n{i}", f"n{i + 1}") for i in range(7)], "a string, b string")
+    with pytest.raises(RuntimeError, match=r"max_iter=1\b.*all 1 iterations"):
+        connected_components(df, max_iter=1)
+    got = {(r.node, r.component) for r in connected_components(df).collect()}
+    assert got == {(f"n{i}", "n0") for i in range(8)}

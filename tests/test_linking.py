@@ -145,3 +145,101 @@ def test_salted_join_rejects_key_only_salt(spark):
         salted_join(
             fact.withColumn("v", F.lit(1)), dim, "k", salt_by=["k"]
         )
+
+
+def _synth_case(n_convs, seed):
+    def build(spark):
+        t = synth.transcripts_df(spark, n_convs=n_convs, seed=seed)
+        return t, ner.extract_mentions(t, synth.gazetteer_dict()), synth.alias_df(spark)
+
+    return build
+
+
+def _text_case(texts, alias_rows):
+    """All ``texts`` as mentions of one turn, types alternating PERS/ORG
+    so adjacent mentions also form works_for triples."""
+
+    def build(spark):
+        from datetime import datetime, timezone
+
+        t = spark.createDataFrame(
+            [("c1", 0, "user", " ".join(texts), None, datetime(2026, 1, 1, tzinfo=timezone.utc))],
+            schemas.TRANSCRIPTS,
+        )
+        m = spark.createDataFrame(
+            [("c1", 0, k % 2, ("PERS", "ORG")[k % 2], k, k + 1, x) for k, x in enumerate(texts)],
+            schemas.MENTIONS,
+        )
+        return t, m, spark.createDataFrame(alias_rows, schemas.ALIAS_DICT)
+
+    return build
+
+
+_ALIASES = [
+    ("محمد علي", "E1", "PERS", 1.0),
+    ("شركه النور", "E2", "ORG", 1.0),
+    ("القاهره", "E3", "GPE", 1.0),
+]
+
+# (case, input builder, (surface, canonical_id, link_kind) rows the
+# local map must hold, so each case exercises what it names)
+_PARITY_CASES = [
+    ("synth_seed42", _synth_case(20, 42), []),
+    ("synth_seed5", _synth_case(10, 5), []),
+    ("no_mentions", _text_case([], _ALIASES), []),
+    ("all_alias_hits", _text_case(["محمد علي", "القاهره"], _ALIASES), [("القاهره", "E3", "alias")]),
+    (
+        "empty_alias_dict",
+        _text_case(["عبد الرحمن السعيد", "عبد الرحمن السعيدي", "زيد"], []),
+        [("عبد الرحمن السعيدي", "S:عبد الرحمن السعيد", "lsh_cluster"), ("زيد", "S:زيد", "self")],
+    ),
+    (
+        "equal_weight_ties",
+        _text_case(["نور", "نورا"], [("نور", "E9", "PERS", 1.0), ("نور", "E4", "ORG", 1.0)]),
+        [("نور", "E4", "alias")],
+    ),
+    ("short_surfaces", _text_case(["ا", "اب", "ب", "ابت"], [("ا", "E7", "PERS", 1.0), ("ابت", "E8", "ORG", 1.0)]), []),
+    (
+        "two_entities_in_component",
+        _text_case(
+            ["موسسه البحوث العلميا"],
+            [("موسسه البحوث العلميه", "E6", "ORG", 1.0), ("موسسه البحوث العلمي", "E5", "ORG", 1.0)],
+        ),
+        [("موسسه البحوث العلميا", "E5", "lsh")],
+    ),
+    (
+        # 3-shingle sets sharing 2 of 4: Jaccard exactly at the 0.5 threshold
+        "jaccard_at_threshold",
+        _text_case(["نابلز"], [("نابلس", "E1", "GPE", 1.0)]),
+        [("نابلز", "E1", "lsh")],
+    ),
+    (
+        "arabic_fold",
+        _text_case(["مُحَمَّد عَلِي", "شركة النور", "القاهرة"], _ALIASES),
+        [("محمد علي", "E1", "alias"), ("شركه النور", "E2", "alias")],
+    ),
+]
+
+
+@pytest.mark.parametrize("build,want", [c[1:] for c in _PARITY_CASES], ids=[c[0] for c in _PARITY_CASES])
+def test_local_branch_matches_distributed(spark, monkeypatch, build, want):
+    """The driver branch of link_surfaces and the distributed plan
+    (forced with LOCAL_LIMIT = 0) give set-equal surface maps, and so
+    set-equal edges and nodes, on synth and degenerate inputs."""
+    from arabicner_spark.plans import pipeline
+
+    t, m, a = build(spark)
+    m = m.localCheckpoint(eager=True)
+    tr = triples.extract_triples(m)
+
+    def outputs():
+        smap = linking.link_surfaces(m, a).localCheckpoint(eager=True)
+        return [
+            {tuple(r) for r in df.collect()}
+            for df in (smap, pipeline._edges(tr, smap, t), pipeline._nodes(m, smap, t))
+        ]
+
+    local = outputs()
+    monkeypatch.setattr(linking, "LOCAL_LIMIT", 0)
+    assert outputs() == local
+    assert set(want) <= local[0]
