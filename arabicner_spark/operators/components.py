@@ -65,13 +65,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr_edges.union(self_edges)
 
 
-DRIVER_THRESHOLD = 200_000
-
-# node is NOT NULL (_canon drops NULL endpoints), which spares every
-# consumer's plan an isnotnull(node) filter
-_CC_SCHEMA = "node string not null, component string"
-
-
 def union_find(pairs: list) -> dict:
     """(a, b) pairs -> {node: min node id of its component}, for every
     node that appears in a pair.  Union by min id keeps the
@@ -99,7 +92,7 @@ def connected_components_adaptive(
     edges: DataFrame,
     src: str = "a",
     dst: str = "b",
-    driver_threshold: int = DRIVER_THRESHOLD,
+    driver_threshold: int = 200_000,
 ) -> DataFrame:
     """Strategy pick from runtime stats (the AQE philosophy applied to
     the CC fixpoint): a vocabulary-sized edge set is solved with a
@@ -115,7 +108,11 @@ def connected_components_adaptive(
     if n > driver_threshold:
         return connected_components(e)
     out = sorted(union_find([(r["a"], r["b"]) for r in e.collect()]).items())
-    return one_slice_df(edges.sparkSession, out, _CC_SCHEMA)
+    # node is never NULL (_canon drops NULL endpoints); the filter puts
+    # that fact in the plan's constraints, which consumers' plans use
+    return one_slice_df(edges.sparkSession, out, "node string, component string").where(
+        F.col("node").isNotNull()
+    )
 
 
 def one_slice_df(session, rows, schema) -> DataFrame:

@@ -45,9 +45,10 @@ def test_oracle_link_agreement(spark, linked):
     assert got == want
 
 
-def test_lsh_reaches_edit_variant(spark):
+def test_lsh_reaches_edit_variant(spark, monkeypatch):
     """A surface that is an edit-distance-1 variant of an alias (no
-    exact hit) must link via LSH + components to that alias' entity."""
+    exact hit) must link via LSH + components to that alias' entity,
+    on the driver branch and on the forced distributed plan."""
     from datetime import datetime, timezone
 
     # نابلسX-style variant: drop last char of a long alias
@@ -56,32 +57,37 @@ def test_lsh_reaches_edit_variant(spark):
     df = spark.createDataFrame(rows, schemas.TRANSCRIPTS)
     gaz = {"GPE": {("القاهر",)}}  # make NER detect the variant surface
     m = ner.extract_mentions(df, gaz)
-    smap = {r.surface: (r.canonical_id, r.link_kind) for r in
-            linking.link_surfaces(m, synth.alias_df(spark)).collect()}
-    canon, kind = smap["القاهر"]
     # القاهر is itself an alias row (edit variant planted by
     # make_alias_rows with weight 0.5) OR reachable via LSH; either way
     # it must resolve to القاهرة's entity id
     alias_rows = synth.make_alias_rows()
     from arabicner_spark.functions.normalize import normalize_py
     want = [eid for a, eid, t, w in alias_rows if a == normalize_py(target)][0]
-    assert canon == want
+    for limit in (linking.LOCAL_LIMIT, 0):
+        monkeypatch.setattr(linking, "LOCAL_LIMIT", limit)
+        smap = {r.surface: (r.canonical_id, r.link_kind) for r in
+                linking.link_surfaces(m, synth.alias_df(spark)).collect()}
+        canon, kind = smap["القاهر"]
+        assert canon == want
 
 
-def test_canonicalize_triples_rewrites_ids(spark, linked):
+def test_canonicalize_triples_rewrites_ids(spark, linked, monkeypatch):
     df = synth.transcripts_df(spark, n_convs=20, seed=42)
     m = ner.extract_mentions(df, synth.gazetteer_dict())
     t = triples.extract_triples(m)
-    smap = linking.link_surfaces(m, synth.alias_df(spark))
-    edges = linking.canonicalize_triples(t, smap)
-    assert edges.count() == t.count()
-    # every src/dst resolved to an entity id or S: surface
-    bad = edges.where(
-        ~(F.col("src").startswith("E") | F.col("src").startswith("S:"))
-    ).count()
-    assert bad == 0
-    # gazetteer surfaces must all resolve to E-ids (they are aliases)
-    assert edges.where(F.col("src").startswith("S:")).count() == 0
+    # the driver branch, then the forced distributed plan
+    for limit in (linking.LOCAL_LIMIT, 0):
+        monkeypatch.setattr(linking, "LOCAL_LIMIT", limit)
+        smap = linking.link_surfaces(m, synth.alias_df(spark))
+        edges = linking.canonicalize_triples(t, smap)
+        assert edges.count() == t.count()
+        # every src/dst resolved to an entity id or S: surface
+        bad = edges.where(
+            ~(F.col("src").startswith("E") | F.col("src").startswith("S:"))
+        ).count()
+        assert bad == 0
+        # gazetteer surfaces must all resolve to E-ids (they are aliases)
+        assert edges.where(F.col("src").startswith("S:")).count() == 0
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -96,9 +102,11 @@ def test_salted_join_matches_plain_join(spark):
     assert plain == salted and len(plain) == 1000
 
 
-def test_salted_alias_path_matches_broadcast(spark):
+def test_salted_alias_path_matches_broadcast(spark, monkeypatch):
     """Forcing the salted shuffle join (broadcast_alias_limit=0) must
-    produce the identical surface map."""
+    produce the identical surface map.  Both runs take the distributed
+    plan: the driver branch has no alias join to switch."""
+    monkeypatch.setattr(linking, "LOCAL_LIMIT", 0)
     df = synth.transcripts_df(spark, n_convs=10, seed=5)
     m = ner.extract_mentions(df, synth.gazetteer_dict())
     a = synth.alias_df(spark)
@@ -224,16 +232,17 @@ _PARITY_CASES = [
 @pytest.mark.parametrize("build,want", [c[1:] for c in _PARITY_CASES], ids=[c[0] for c in _PARITY_CASES])
 def test_local_branch_matches_distributed(spark, monkeypatch, build, want):
     """The driver branch of link_surfaces and the distributed plan
-    (forced with LOCAL_LIMIT = 0) give set-equal surface maps, and so
-    set-equal edges and nodes, on synth and degenerate inputs."""
+    (forced with LOCAL_LIMIT = 0, with the broadcast alias join and with
+    the shuffle join) give set-equal surface maps, and so set-equal
+    edges and nodes, on synth and degenerate inputs."""
     from arabicner_spark.plans import pipeline
 
     t, m, a = build(spark)
     m = m.localCheckpoint(eager=True)
     tr = triples.extract_triples(m)
 
-    def outputs():
-        smap = linking.link_surfaces(m, a).localCheckpoint(eager=True)
+    def outputs(**kw):
+        smap = linking.link_surfaces(m, a, **kw).localCheckpoint(eager=True)
         return [
             {tuple(r) for r in df.collect()}
             for df in (smap, pipeline._edges(tr, smap, t), pipeline._nodes(m, smap, t))
@@ -242,4 +251,5 @@ def test_local_branch_matches_distributed(spark, monkeypatch, build, want):
     local = outputs()
     monkeypatch.setattr(linking, "LOCAL_LIMIT", 0)
     assert outputs() == local
+    assert outputs(broadcast_alias_limit=0) == local
     assert set(want) <= local[0]
